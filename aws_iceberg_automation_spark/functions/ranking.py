@@ -98,18 +98,11 @@ def quantile_bucket_ranks(
     always share a bucket): rank = #(approx-quantile boundaries ≤
     value), all boundary arrays computed in ONE agg, collected, and
     inlined as literals — balanced under skew, unlike equi-width cuts.
-    NON-NULL value contract (shared by every global_* decomposition
-    built on this): percentile_approx SKIPS NULLs, so a NULL value
-    falls below every boundary and lands in bucket 0, and the
-    within-bucket rank window then orders it NULLS FIRST (Spark ASC
-    default) — which diverges from an oracle's ORDER BY ... NULLS LAST
-    (DuckDB/ANSI default). Callers must pre-coalesce or pre-filter
-    nullable dimensions (every registered consumer does: q208's RFM
-    dims are aggregates over non-null columns).
-    Batch frames only (the boundary collect is an eager tiny job). NB
-    the filter lambda must stay single-argument: PySpark calls a
-    two-argument HOF lambda as (element, index), so a captured default
-    would silently compare boundaries against 0..n_buckets-2."""
+    Callers: the Z-order layout and ``grouped_row_number``; the global_*
+    helpers bucket through the exact histogram below instead.
+    NON-NULL value contract: percentile_approx SKIPS NULLs, so a NULL
+    value falls below every boundary and lands in bucket 0.
+    Batch frames only (the boundary collect is an eager tiny job)."""
     if df.isStreaming:
         raise ValueError(
             "quantile_bucket_ranks is batch-only: it collects quantile "
@@ -181,41 +174,38 @@ def quantile_bucket_ranks(
 
 
 # --------------------------------------------------------------------
-# r11: single-pass eager bucketization (guide §2.4 — remove shuffles/
-# jobs outright; VERDICT r10 ask #3). The r10 decomposition shape ran
-# TWO sequential eager jobs before the main query — a percentile_approx
-# boundary agg, then a per-bucket count/sum agg over the bucketed frame
-# — because bucket membership depends on the boundaries. This replaces
-# both with ONE exact histogram job: every value is quantized to a
-# bounded-cardinality integer CELL by an *exactly monotone* map
-# (bit tricks below — never floating log/quantile arithmetic, whose
-# 1-ulp wobble could misorder adjacent values and silently corrupt
-# ranks), the per-cell exact counts/sums are collected once, and both
-# the quantile-balanced bucket cuts AND the per-bucket offsets derive
-# from that one collected frame in Python. The cuts are then inverted
-# back to exact VALUE-space literals, so the main plan keeps the
-# identical r10 CASE-sum bucket expression (no reflect/bin anywhere in
-# the per-row path) and the decomposition executes its input TWICE
-# (histogram + main) instead of three times.
+# Single-pass eager bucketization behind every global_* helper (guide
+# §2.4 — remove shuffles/jobs outright). Bucket membership and the
+# per-bucket offsets both come from ONE exact histogram job: every
+# value is quantized to a bounded-cardinality integer CELL by an
+# *exactly monotone* map (bit tricks below — never floating
+# log/quantile arithmetic, whose 1-ulp wobble could misorder adjacent
+# values and silently corrupt ranks), the per-cell exact counts/sums
+# are collected once, and both the quantile-balanced bucket cuts AND
+# the per-bucket offsets derive from that one collected frame in
+# Python. The cuts are then inverted back to exact VALUE-space
+# literals, so the main plan keeps the literal CASE-sum bucket
+# expression (no reflect/bin anywhere in the per-row path) and the
+# decomposition executes its input twice (histogram + main).
 #
 # Correctness: ranks/ntiles/prefix sums are exact under ANY monotone
 # bucketing (cross-bucket order = value order, ties never straddle a
-# bucket), so swapping percentile_approx cuts for histogram cuts is
-# results-identical by construction; only balance could differ, and the
-# cells are fine enough (≥256 cells per binary octave) that cut quality
-# matches approx-quantiles for any data spanning a few percent of
-# relative range. Deterministic-re-execution contract (ADVICE r10):
-# the input frame must produce identical rows on re-execution (static
-# files or checkpoint_df-pinned) — offsets collected here are inlined
-# into the main plan, so a frame that re-executes differently would
-# rank wrong. All registered callers read static fixtures or
-# checkpoints; q208 pins per_cust explicitly.
+# bucket); the cells are fine enough (≥256 cells per binary octave)
+# that cut balance matches approx-quantiles for any data spanning a
+# few percent of relative range. NULL values get a NULL cell, count in
+# bucket 0 (every `lit <= NULL` is NULL → 0) and rank NULLS FIRST; NaN
+# gets the top cell, above +∞, exactly where Spark orders it and where
+# the CASE-sum puts it (`CAST('NaN' AS DOUBLE) <= NaN` is true).
+# Deterministic-re-execution contract (ADVICE r10): the input frame
+# must produce identical rows on re-execution (static files or
+# checkpoint_df-pinned) — offsets collected here are inlined into the
+# main plan, so a frame that re-executes differently would rank wrong.
+# All registered callers read static fixtures or checkpoints; q208
+# pins per_cust explicitly.
 
 _INT_KINDS = {"tinyint", "smallint", "int", "bigint"}
 _DBL_KINDS = {"float", "double"}
 _I64_MIN = -(2**63)
-_NAN_CELL = _I64_MIN  # NaN forced below every real cell → bucket 0,
-# matching the main plan's CASE (every `lit <= NaN` is false → 0)
 _DBL_CELL_SHIFT = 44  # sortable-bits >> 44: 256 cells/octave, ≤ ~1M
 # possible cells across the entire double range (the collect bound)
 
@@ -243,27 +233,27 @@ def _int_cell_sql(s: str) -> str:
 
 
 def _dbl_bits_sql(s: str) -> str:
-    """IEEE-754 bits of a DOUBLE scratch column as BIGINT (exact —
-    reflection into Double.doubleToRawLongBits; JVM-internal, no Python
-    boundary). +0.0 is added first so -0.0 and 0.0 share bits (the
-    engine-wide -0.0 normalization; x + 0.0 is the IEEE idiom)."""
+    """IEEE-754 bits of a DOUBLE scratch column as BIGINT, NULL for a
+    NULL value (exact — reflection into Double.doubleToLongBits, which
+    would abort the job on a NULL argument; JVM-internal, no Python
+    boundary). doubleToLongBits collapses every NaN to the canonical
+    0x7ff8…, which sorts above +∞ after the sign flip. +0.0 is added
+    first so -0.0 and 0.0 share bits (the engine-wide -0.0
+    normalization; x + 0.0 is the IEEE idiom)."""
     return (
-        "CAST(reflect('java.lang.Double','doubleToRawLongBits', "
-        f"`{s}` + CAST(0.0 AS DOUBLE)) AS BIGINT)"
+        f"CASE WHEN `{s}` IS NULL THEN NULL ELSE "
+        "CAST(reflect('java.lang.Double','doubleToLongBits', "
+        f"`{s}` + CAST(0.0 AS DOUBLE)) AS BIGINT) END"
     )
 
 
-def _dbl_cell_sql(val: str, bits: str) -> str:
+def _dbl_cell_sql(bits: str) -> str:
     """Monotone cell from the bits column: the standard sign-flip makes
     the bit pattern totally ordered as a signed long (negative doubles
-    get their low 63 bits flipped), then >> 44 buckets it. NaN is
-    forced to the below-everything marker so the histogram agrees with
-    the main plan's CASE-sum (where every `lit <= NaN` is false)."""
+    get their low 63 bits flipped), then >> 44 buckets it. NULL bits
+    give a NULL cell."""
     flip = f"(`{bits}` ^ (shiftright(`{bits}`, 63) & {2**63 - 1}L))"
-    return (
-        f"CASE WHEN isnan(`{val}`) THEN {_NAN_CELL}L "
-        f"ELSE shiftright({flip}, {_DBL_CELL_SHIFT}) END"
-    )
+    return f"shiftright({flip}, {_DBL_CELL_SHIFT})"
 
 
 def _int_cell_max(k: int) -> int:
@@ -291,10 +281,11 @@ def _dbl_cell_min(k: int) -> float:
     bits = s if s >= 0 else s ^ (2**63 - 1)
     v = struct.unpack("<d", struct.pack("<q", bits))[0]
     if v != v:
-        # the cell containing -inf also spans the negative-NaN bit
-        # patterns below it; no real value sits under -inf, and NaN
-        # inputs are forced to _NAN_CELL, so -inf is the true minimum
-        return float("-inf")
+        # Above +∞ sits only the canonical-NaN cell, whose members the
+        # CASE-sum selects with a NaN literal. The cell holding -∞ also
+        # spans the negative-NaN bit patterns below it, which no input
+        # produces, so -∞ is its true minimum.
+        return float("nan") if k >= 0 else float("-inf")
     return v + 0.0  # never emit a -0.0 literal (codegen CSE bug, r10)
 
 
@@ -337,9 +328,7 @@ def _pick_cuts_and_totals(
             and i + 1 < len(entries)
             and cum * n_buckets >= (len(cuts) + 1) * total
         ):
-            nxt = entries[i + 1][0]
-            if nxt is not None and nxt != _NAN_CELL:
-                cuts.append(nxt)
+            cuts.append(entries[i + 1][0])
     counts = [0] * n_buckets
     sums = [[0] * n_buckets for _ in range(n_sums)]
     for e in entries:
@@ -357,23 +346,22 @@ def _cells_hist_bucketize(
     n_buckets: int,
     sum_cols: list[str] | None = None,
 ):
-    """ONE eager job replacing the boundary-agg + bucket-sums pair:
-    exact per-cell histogram (explode-per-dimension when multi-rank, so
-    the collect is bounded by dims × cells, never a cell cross
-    product), Python-side balanced cuts + exact offsets, and bucket
-    columns rebuilt as value-space literal CASE-sums. Returns
-    ``(bucketed_df, counts_by_bucket_col, sums_by_col)`` or None when a
-    value dtype is outside the exact-cell domain (then callers fall
-    back to the r10 two-job percentile path — also the
-    SPARK_GRAFT_SINGLEPASS_BUCKETS=0 kill-switch, for A/Bs).
-    ``sum_cols`` requires a single rank and integer-typed columns
-    (the _eager_bucket_sums exactness contract)."""
-    import os
-
+    """The ONE eager job behind every global_* helper: exact per-cell
+    histogram (explode-per-dimension when multi-rank, so the collect is
+    bounded by dims × cells, never a cell cross product), Python-side
+    balanced cuts + exact offsets, and bucket columns rebuilt as
+    value-space literal CASE-sums. Returns ``(bucketed_df,
+    counts_by_bucket_col, sums_by_col)``. Integer values and DATEs (as
+    ``unix_date``) share the integer cells, float/double values the
+    IEEE-bits cells; any other type raises TypeError. ``sum_cols``
+    requires a single rank and integer-typed columns, so the Python
+    per-bucket sums are exact (NULLs contribute nothing, as in SUM)."""
     if df.isStreaming:
-        return None  # the legacy path raises the batch-only error
-    if os.environ.get("SPARK_GRAFT_SINGLEPASS_BUCKETS", "1") == "0":
-        return None
+        raise ValueError(
+            "the global rank helpers are batch-only: they collect a "
+            "value histogram eagerly at plan-build time, which a "
+            "streaming DataFrame cannot do"
+        )
     if sum_cols and len(ranks) != 1:
         raise ValueError("sum_cols requires exactly one rank dimension")
     names = [n for _, n in ranks]
@@ -381,25 +369,25 @@ def _cells_hist_bucketize(
         *[v.alias(f"_p{i}") for i, (v, _) in enumerate(ranks)]
     )
     kinds: list[str] = []
-    for f in probe.schema.fields:
+    vals: list[Column] = []
+    for (v, _), f in zip(ranks, probe.schema.fields):
         t = f.dataType.simpleString()
-        if t in _INT_KINDS:
+        if t in _INT_KINDS or t == "date":
             kinds.append("int")
+            vals.append((F.unix_date(v) if t == "date" else v).cast("bigint"))
         elif t in _DBL_KINDS:
             kinds.append("dbl")
+            vals.append(v.cast("double"))
         else:
-            return None
+            raise TypeError(
+                f"the global rank helpers order integer, float, double "
+                f"or date values, not {t} ({v})"
+            )
     val_cols = [f"_qbr_val_{n}" for n in names]
     cell_cols = [f"_qbr_cell_{n}" for n in names]
     bits_cols = [f"_qbr_bits_{n}" for n in names]
     _check_names(df, *val_cols, *cell_cols, *bits_cols)
-    out = df.select(
-        "*",
-        *[
-            (v.cast("bigint") if k == "int" else v.cast("double")).alias(s)
-            for (v, _), k, s in zip(ranks, kinds, val_cols)
-        ],
-    )
+    out = df.select("*", *[v.alias(s) for v, s in zip(vals, val_cols)])
     # Histogram branch: project only the needed columns before the agg
     # (guide §2.3), materialize bits, then cells, then aggregate.
     hist = out.select(*val_cols, *(sum_cols or []))
@@ -415,7 +403,7 @@ def _cells_hist_bucketize(
         *(sum_cols or []),
         *[
             F.expr(
-                _int_cell_sql(s) if k == "int" else _dbl_cell_sql(s, bc)
+                _int_cell_sql(s) if k == "int" else _dbl_cell_sql(bc)
             ).alias(c)
             for k, s, c, bc in zip(kinds, val_cols, cell_cols, bits_cols)
         ],
@@ -477,60 +465,6 @@ def desc_as_asc(c: Column) -> Column:
     return F.coalesce(-c, F.lit(float("inf")))
 
 
-def _le_pred(value: Column):
-    """Single-arg ``boundary <= value`` predicate with ``value`` bound
-    at definition time (not loop-late-bound)."""
-    return lambda b: b <= value
-
-
-def _eager_bucket_sums(
-    b: DataFrame,
-    specs: list[tuple[str, Column, str]],
-    n_buckets: int,
-) -> dict[str, list[int]]:
-    """Per-bucket integer sums for every ``(bucket_col, value_expr,
-    name)`` spec in ONE tiny eager job: a grouped aggregate over the
-    distinct bucket columns (map-side partial agg → at most
-    n_buckets^|distinct bucket cols| rows cross the wire — 64 for the
-    single-dimension helpers, capped at 64³ ≈ 262k tiny rows for
-    q208's three dimensions, INPUT-SIZE-INDEPENDENT), collected and
-    re-accumulated per dimension in Python.
-
-    This replaces the old in-plan scaffolding (per-bucket groupBy →
-    triangular broadcast self-join → broadcast back), which cost each
-    decomposition 2-3 extra Exchanges plus 1-2 BroadcastExchange jobs
-    PER DIMENSION at any scale (guide §2.4: remove shuffles outright).
-    (A one-row agg of n_buckets conditional sums per spec was measured
-    and rejected: 192 aggregate expressions took ~3.5 s of codegen
-    compile per call at any input size; the grouped form is ~1 s and
-    has no expression blow-up.)
-
-    Integer-exactness contract: every value_expr is integer-typed
-    (callers pass counts or integer-cent/micro columns), so the Python
-    prefix sums downstream are exact. NULL values contribute nothing
-    (SUM skips NULLs), matching the old per-bucket groupBy sums."""
-    bcs = list(dict.fromkeys(bc for bc, _, _ in specs))
-    if len(bcs) > 3:
-        raise ValueError(
-            f"{len(bcs)} bucket dimensions would collect up to "
-            f"{n_buckets}^{len(bcs)} group rows — cap is 3 dimensions"
-        )
-    aggs = [
-        F.sum(val).cast("bigint").alias(f"_ebs_{i}")
-        for i, (_, val, _) in enumerate(specs)
-    ]
-    rows = b.groupBy(*bcs).agg(*aggs).collect()
-    out: dict[str, list[int]] = {name: [0] * n_buckets for _, _, name in specs}
-    nb = len(bcs)
-    pos = [(bcs.index(bc), nb + i, name) for i, (bc, _, name) in enumerate(specs)]
-    for r in rows:  # positional access: Row.__getitem__(str) is slow × 262k
-        for bpos, vpos, name in pos:
-            v = r[vpos]
-            if v is not None:
-                out[name][r[bpos]] += v
-    return out
-
-
 def _exclusive_prefix(counts: list[int]) -> list[int]:
     """Exclusive prefix sums of a per-bucket count/sum list (exact —
     Python ints)."""
@@ -549,14 +483,6 @@ def _offset_lookup(off: list[int], bucket_col: str) -> Column:
     the BIGINT literals are exact)."""
     arr = ",".join(f"{v}L" for v in off)
     return F.expr(f"element_at(array({arr}), `{bucket_col}` + 1)")
-
-
-def _with_value_buckets(
-    df: DataFrame, value: Column, n_buckets: int
-) -> DataFrame:
-    """quantile_bucket_ranks for the single ``_bucket`` column the rank
-    and prefix-sum decompositions key on."""
-    return quantile_bucket_ranks(df, [(value, "_bucket")], n_buckets)
 
 
 def _bucket_offsets(
@@ -604,51 +530,43 @@ def global_row_number(
 ) -> DataFrame:
     """Exact global ``row_number() OVER (ORDER BY value, *tiebreaks)``
     WITHOUT a single-partition window: range-bucket on the value
-    (monotone ⇒ cross-bucket order equals value order), per-bucket
-    counts prefix-summed through a tiny broadcast triangular join, and
-    a PARTITIONED rank window inside each bucket. Every stage is
+    (monotone ⇒ cross-bucket order equals value order), add each
+    bucket's exclusive-prefix row count as a literal array lookup, and
+    rank inside each bucket with a PARTITIONED window. Every stage is
     bounded: the widest window sees ~N/n_buckets rows (tune n_buckets
-    to the cluster; boundaries come from approx quantiles, so skewed
-    score distributions still ~balance). (value, *tiebreaks) must be a
-    total order for a deterministic result.
+    to the cluster; the cuts are quantile-balanced, so skewed score
+    distributions still ~balance). (value, *tiebreaks) must be a total
+    order for a deterministic result.
 
-    Pass budget: the plan reads the base three times (boundary agg,
-    bucket-count agg, main — the first two are tiny one-row/one-array
-    eager jobs). A spark_partition_id()-based variant over
+    ``value`` may be integer, float, double or date. NULL values rank
+    first and NaN ranks above +∞, so the result equals the window form
+    ordered by ``value.asc_nulls_first()``. Any other type raises
+    TypeError; a streaming frame raises ValueError.
+
+    Pass budget: ONE tiny eager job (the exact cell histogram,
+    ``_cells_hist_bucketize``, ≤ n_buckets offsets collected) plus the
+    main query. A spark_partition_id()-based variant over
     repartitionByRange was measured and rejected — the nondeterministic
-    partition-id expression blocks exchange reuse, so it also runs
-    three scans while giving up deterministic, testable bucketing. At
-    extreme input sizes, persist() the projected (value, tiebreaks)
-    frame before calling; the decomposition itself never concentrates
-    data.
+    partition-id expression blocks exchange reuse while giving up
+    deterministic, testable bucketing. At extreme input sizes,
+    persist() the projected (value, tiebreaks) frame before calling;
+    the decomposition itself never concentrates data.
 
-    r10 optimization (guide §2.4): per-bucket counts are ≤ n_buckets
-    bigints, so the offsets come from one tiny eager agg inlined as a
-    literal array lookup instead of the old groupBy → triangular
-    broadcast self-join → broadcast-join-back scaffolding. Identical
-    ranks (same integers, same window), 3 fewer Exchanges + 2 fewer
-    broadcast jobs in the plan. r11: for int/double values the
-    boundary agg and the count agg merge into ONE exact-histogram
-    eager job (_cells_hist_bucketize) — same ranks (any monotone
-    bucketing is results-identical), one fewer eager job and one fewer
-    input execution at any scale.
     DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
+    histogram job and the main query are separate executions of
+    ``df`` — the input must produce identical rows on re-execution
     (static files or a checkpoint_df-pinned frame), or the inlined
     offsets mismatch the ranked rows and results are silently wrong.
     Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
+    non-deterministic upstream before calling. The same contracts hold
+    for ``global_ntile``, ``global_ntiles`` and
+    ``partitioned_prefix_sums``.
     """
     _check_names(df, rank_name, "_bucket")
-    res = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
-    if res is not None:
-        b, counts = res[0], res[1]["_bucket"]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        counts = _eager_bucket_sums(
-            b, [("_bucket", F.lit(1), "cnt")], n_buckets
-        )["cnt"]
+    b, counts_by, _ = _cells_hist_bucketize(
+        df, [(value, "_bucket")], n_buckets
+    )
+    counts = counts_by["_bucket"]
     off = _exclusive_prefix(counts)
     w = Window.partitionBy("_bucket").orderBy(value, *tiebreaks)
     return (
@@ -671,35 +589,19 @@ def global_ntile(
 ) -> DataFrame:
     """Exact ``ntile(k) OVER (ORDER BY value, *tiebreaks)`` without a
     single-partition window: the ``global_row_number`` decomposition
-    plus ntile's closed-form tile assignment — with n = q·k + r, tiles
-    1..r hold q+1 rows, tiles r+1..k hold q (when n < k every rank
-    lands in the first block, so the q=0 division branch is never
-    evaluated). Same integer tiles as the window form, same hash.
-    The total row count and the bucket offsets come from the same tiny
-    eager per-bucket-count agg (≤ n_buckets bigints — see
-    ``_eager_bucket_sums``), inlined as literals; all scaffolding uses
-    ``_gn_`` names so caller columns — including one named like
-    ``out_name``'s default — can never be clobbered.
-    ``value`` must be NON-NULL (quantile_bucket_ranks contract: NULLs
-    bucket to 0 and rank NULLS FIRST, diverging from ANSI NULLS LAST) —
-    coalesce or filter nullable dimensions before tiling.
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
+    plus ntile's closed-form tile assignment (``_ntile_expr``). Same
+    integer tiles as the window form, same hash. The total row count
+    and the bucket offsets come from the same histogram job, inlined
+    as literals; all scaffolding uses ``_gn_`` names so caller columns
+    — including one named like ``out_name``'s default — can never be
+    clobbered. Value types, NULL/NaN order and the
+    deterministic-re-execution contract are ``global_row_number``'s.
     """
     _check_names(df, out_name, "_bucket", "_gn_rk")
-    res = _cells_hist_bucketize(df, [(value, "_bucket")], n_buckets)
-    if res is not None:
-        b, counts = res[0], res[1]["_bucket"]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        counts = _eager_bucket_sums(
-            b, [("_bucket", F.lit(1), "cnt")], n_buckets
-        )["cnt"]
+    b, counts_by, _ = _cells_hist_bucketize(
+        df, [(value, "_bucket")], n_buckets
+    )
+    counts = counts_by["_bucket"]
     off = _exclusive_prefix(counts)
     n_total = sum(counts)
     w = Window.partitionBy("_bucket").orderBy(value, *tiebreaks)
@@ -718,8 +620,8 @@ def global_ntile(
 
 def _ntile_expr(rank: Column, k: int, n_total: int) -> Column:
     """ntile's closed-form tile from an exact 1-based global rank and
-    the exact total row count ``n_total`` (a Python int — the eager
-    count agg's sum, exact): with n = q·k + r, tiles 1..r hold q+1
+    the exact total row count ``n_total`` (a Python int — the
+    histogram's total, exact): with n = q·k + r, tiles 1..r hold q+1
     rows, tiles r+1..k hold q. When n < k every rank lands in the
     first block, so the q=0 division branch is never evaluated."""
     q_sz, r_sz = divmod(n_total, k)
@@ -748,48 +650,26 @@ def global_ntiles(
     the RFM-style segmentations need.
 
     Chaining ``global_ntile`` per dimension is correct but
-    constant-heavy: each call starts with an eager quantile-boundary
-    collect whose plan CONTAINS every previous dimension's
-    join+window decomposition, so dimension i's tiny boundary job
-    drags i-1 windows' worth of codegen and execution behind it (the
-    74-shuffle q208 profile). This form hoists the eager part: ONE
-    boundary job computes every dimension's bucket cuts over the plain
-    input frame, ONE one-row eager agg computes every dimension's
-    per-bucket counts (≤ dims × n_buckets bigints, inlined as literal
-    offset/total lookups — no counts groupBys, no triangular broadcast
-    joins, no ntot cross join in the plan), and only the cheap
-    partitioned rank windows chain — one repartition per dimension,
-    which is the irreducible cost of k independent global orders.
-    Tile semantics, determinism contract ((value_i, *tiebreaks) total
-    order per dimension), the NON-NULL value contract, and hashes are
-    identical to ``global_ntile``. (The r10 literal-offsets rewrite
-    took q208's AQE-final plan from 27 exchanges / 26 jobs to the
-    irreducible per-dimension windows — see OPTIMIZATION_r10.md.)
-    
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
+    constant-heavy: each call starts with an eager histogram collect
+    whose plan CONTAINS every previous dimension's window
+    decomposition, so dimension i's tiny job drags i-1 windows' worth
+    of codegen and execution behind it (the 74-shuffle q208 profile).
+    This form hoists the eager part: ONE histogram job computes every
+    dimension's cuts and per-bucket counts over the plain input frame
+    (≤ dims × n_buckets offsets, inlined as literal lookups), and only
+    the cheap partitioned rank windows chain — one repartition per
+    dimension, which is the irreducible cost of k independent global
+    orders. Tile semantics, value types, NULL/NaN order, the
+    determinism contract ((value_i, *tiebreaks) total order per
+    dimension) and hashes are identical to ``global_ntile``.
     """
     names = [n for _, n in specs]
     buckets = [f"_bucket_{n}" for n in names]
     rks = [f"_gn_rk_{n}" for n in names]
     _check_names(df, *names, *buckets, *rks)
-    res = _cells_hist_bucketize(
+    b, sums, _ = _cells_hist_bucketize(
         df, [(v, bc) for (v, _), bc in zip(specs, buckets)], n_buckets
     )
-    if res is not None:
-        b, sums = res[0], res[1]
-    else:
-        b = quantile_bucket_ranks(
-            df, [(v, bc) for (v, _), bc in zip(specs, buckets)], n_buckets
-        )
-        sums = _eager_bucket_sums(
-            b, [(bc, F.lit(1), bc) for bc in buckets], n_buckets
-        )
     n_total = sum(sums[buckets[0]])
     out = b
     for (value, name), bcol, rk in zip(specs, buckets, rks):
@@ -817,40 +697,24 @@ def partitioned_prefix_sums(
     bucket/offset decomposition as ``global_row_number``, with the
     within-bucket cumulative window PARTITIONED by bucket. ``value``
     must be unique per row (e.g. the output of a groupBy on it) UNLESS
-    ``tiebreaks`` completes it to a total order — quantile buckets are
+    ``tiebreaks`` completes it to a total order — the buckets are
     MONOTONE (equal values always share a bucket), so a tie never
     spans buckets and the within-bucket (value, *tiebreaks) order is
     the global one. Passing tiebreaks instead of pre-ranking the frame
     (the old q209 shape: global_row_number → prefix sums over rk) is
-    one decomposition instead of two chained ones — the second
-    boundary collect used to re-execute the whole rank plan.
+    one decomposition instead of two chained ones.
 
     INTEGER ``sum_cols`` contract (every registered caller passes
     counts or integer cents/micros): the per-bucket offsets are summed
-    exactly as Python ints in one tiny eager agg and inlined as
-    literals (see ``_eager_bucket_sums``) — same integers the old
-    in-plan triangular broadcast join produced, minus its 2-3
-    Exchanges and broadcast jobs.
-    DETERMINISTIC-RE-EXECUTION CONTRACT (ADVICE r10): the eager
-    histogram/boundary job and the main query are separate executions
-    of ``df`` — the input must produce identical rows on re-execution
-    (static files or a checkpoint_df-pinned frame), or the inlined
-    offsets mismatch the ranked rows and results are silently wrong.
-    Every registered caller reads fixtures or checkpoints; pin any
-    non-deterministic upstream before calling.
+    exactly as Python ints by the histogram job and inlined as
+    literals. Value types, NULL/NaN order and the
+    deterministic-re-execution contract are ``global_row_number``'s.
     """
     tiebreaks = tiebreaks or []
     _check_names(df, "_bucket", *[f"cum_{c}" for c in sum_cols])
-    res = _cells_hist_bucketize(
+    b, _, sums = _cells_hist_bucketize(
         df, [(value, "_bucket")], n_buckets, sum_cols=sum_cols
     )
-    if res is not None:
-        b, sums = res[0], res[2]
-    else:
-        b = _with_value_buckets(df, value, n_buckets)
-        sums = _eager_bucket_sums(
-            b, [("_bucket", F.col(c), c) for c in sum_cols], n_buckets
-        )
     w = (
         Window.partitionBy("_bucket")
         .orderBy(value, *tiebreaks)
@@ -911,7 +775,7 @@ def grouped_row_number(
     group (exactly as PARTITION BY treats them): both the offset join
     and the final bucket join are NULL-SAFE, so no row is dropped."""
     _check_names(df, rank_name, "_bucket", "_off__cnt")
-    b = _with_value_buckets(df, value, n_buckets)
+    b = quantile_bucket_ranks(df, [(value, "_bucket")], n_buckets)
     counts = b.groupBy(*group_cols, "_bucket").agg(
         F.count(F.lit(1)).alias("_cnt")
     )

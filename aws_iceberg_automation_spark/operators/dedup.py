@@ -24,7 +24,7 @@ Shapes at 100 TB:
 
 The fixture corpus has no EXACT duplicates (FIXTURES.md) but does carry
 genuine near-duplicates: the LSH pipeline at threshold 0.5 verifies
-28/25/256 pairs at sf0.001/0.01/0.1, so the oracle comparisons are
+28/25/255 pairs at sf0.001/0.01/0.1, so the oracle comparisons are
 non-vacuous at every scale. Tests additionally inject controlled
 duplicate clusters and assert the pipeline finds them.
 """
@@ -392,7 +392,7 @@ def q82_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold 0.5 — is re-derived by DuckDB on the portable md5 hash
     family, so the driver hash-checks the flagship dedup operator end
     to end (the fixture corpus carries genuine near-dups at every sf:
-    28/25/256 verified pairs at sf0.001/0.01/0.1). Production swaps
+    28/25/255 verified pairs at sf0.001/0.01/0.1). Production swaps
     xxhash64 per hash site (``portable=False``, the default) — banding
     probability and the bucket-cap work bound are hash-independent."""
     return minhash_candidate_pairs(

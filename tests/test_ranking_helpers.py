@@ -5,6 +5,10 @@ adversarial value distributions (ties, skew, negatives, constants)."""
 
 from __future__ import annotations
 
+import datetime
+import re
+
+import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -195,7 +199,7 @@ def _dbl_cells(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "v double")
     return (
         df.select("v", F.expr(_dbl_bits_sql("v")).alias("b"))
-        .select("v", F.expr(_dbl_cell_sql("v", "b")).alias("c"))
+        .select("v", F.expr(_dbl_cell_sql("b")).alias("c"))
         .collect()
     )
 
@@ -235,16 +239,14 @@ def test_int_cell_monotone_and_invertible(spark):
 
 def test_dbl_cell_monotone_and_invertible(spark):
     """Same exactness contract for the IEEE-bits double cell map,
-    including ±0.0, denormals, infinities and NaN (forced below every
-    real cell, matching the CASE-sum's bucket-0 treatment)."""
+    including ±0.0, denormals and infinities; NaN gets the top cell,
+    above +∞ (where Spark orders it and the CASE-sum buckets it), and
+    NULL a NULL cell."""
     import math
     import random
     import struct
 
-    from aws_iceberg_automation_spark.functions.ranking import (
-        _NAN_CELL,
-        _dbl_cell_min,
-    )
+    from aws_iceberg_automation_spark.functions.ranking import _dbl_cell_min
 
     rng = random.Random(12)
     vals = [
@@ -266,9 +268,11 @@ def test_dbl_cell_monotone_and_invertible(spark):
     # -0.0 and 0.0 share a cell
     zero_cells = {r.c for r in rows if r.v == 0.0}
     assert len(zero_cells) == 1
-    # NaN is forced to the below-everything marker
-    nan_rows = _dbl_cells(spark, [float("nan")])
-    assert nan_rows[0].c == _NAN_CELL
+    # NaN sits alone in the top cell, whose threshold is NaN itself;
+    # NULL gets a NULL cell
+    nan_c, null_c = (r.c for r in _dbl_cells(spark, [float("nan"), None]))
+    assert nan_c > rows[-1].c and null_c is None
+    assert math.isnan(_dbl_cell_min(nan_c))
     # inverse: threshold at or below every member, same cell
     per_cell: dict[int, float] = {}
     for r in rows:
@@ -281,63 +285,181 @@ def test_dbl_cell_monotone_and_invertible(spark):
         assert trows[t] == c
 
 
-@pytest.mark.parametrize("dt", ["bigint", "int", "double", "float"])
-def test_single_pass_matches_legacy_two_job_path(spark, dt, monkeypatch):
-    """The r11 single-histogram-job bucketization must produce
-    IDENTICAL ranks/tiles/prefix sums to the r10 percentile_approx +
-    count-agg path (kill-switch A/B) — adversarial ties, spikes and
-    negatives included."""
+_DTYPES = ["bigint", "int", "float", "double", "date"]
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+def _edge_frame(spark, dt):
+    """400 rows of ``(id, v, m)``: heavy ties (id % 7), a skew spike on
+    3 and a negative tail, a NULL every 50 ids, and the dtype's edge
+    values on fixed ids — NaN, ±∞, ±0.0 and denormals for float types,
+    the int64 extremes for bigint. DATE maps the integers to days
+    around the epoch."""
+    i = F.col("id")
+    body = F.when(i < 250, i % 7).when(i < 320, F.lit(3)).otherwise(-i)
+    if dt == "date":
+        v = F.date_add(F.lit(_EPOCH), body.cast("int"))
+    else:
+        v = body.cast(dt)
+    edges = [(i % 50 == 1, F.lit(None))]
+    if dt in ("float", "double"):
+        edges += [
+            (i % 50 == 2, F.lit(float("nan"))),
+            # -0.0 from arithmetic, not a literal (codegen CSE bug, r10)
+            (i % 50 == 3, -(i * 0).cast("double")),
+            (i == 5, F.lit(float("inf"))),
+            (i == 6, F.lit(float("-inf"))),
+            (i == 8, F.lit(5e-324)),
+            (i == 9, F.lit(-5e-324)),
+            (i == 10, F.lit(1e-40)),  # denormal as a float
+        ]
+    if dt == "bigint":
+        edges += [
+            (i == 5, F.lit(2**63 - 1)),
+            (i == 6, F.lit(-(2**63))),
+            (i == 7, F.lit(-(2**63) + 1)),
+            (i == 8, F.lit(2**63 - 2)),
+        ]
+    for cond, lit in edges:
+        v = F.when(cond, lit.cast(dt)).otherwise(v)
+    return spark.range(400).select("id", v.alias("v"), (i % 13).alias("m"))
+
+
+def _numpy_order(rows, dt):
+    """Ids in ``ORDER BY v ASC NULLS FIRST, id`` order by np.lexsort
+    (NaN sorts after +∞ in NumPy as in Spark; -0.0 == 0.0 in both)."""
+    ids = np.array([r.id for r in rows], dtype=np.int64)
+    not_null = np.array([r.v is not None for r in rows])
+    if dt == "date":
+        vals = np.array(
+            [0 if r.v is None else (r.v - _EPOCH).days for r in rows],
+            dtype=np.int64,
+        )
+    else:
+        vals = np.array(
+            [0 if r.v is None else r.v for r in rows],
+            dtype=np.float64 if dt in ("float", "double") else np.int64,
+        )
+    return ids[np.lexsort((ids, vals, not_null))]
+
+
+@pytest.mark.parametrize("dt", _DTYPES)
+def test_helpers_match_window_and_numpy_reference(spark, dt):
+    """All four global helpers against their window forms AND a NumPy
+    lexsort reference, on ties, a spike, negatives, NULL, NaN, ±∞,
+    ±0.0, denormals and int64 extremes. Compared as {id: value} maps
+    (a NaN row tuple never equals itself)."""
     from aws_iceberg_automation_spark.functions.ranking import global_ntiles
 
-    base = spark.range(700).select(
-        F.col("id"),
-        F.when(F.col("id") < 500, (F.col("id") % 7))
-        .when(F.col("id") < 600, F.lit(3))
-        .otherwise(-F.col("id"))
-        .cast(dt)
-        .alias("v"),
-        (F.col("id") % 13).cast("bigint").alias("m"),
+    df = _edge_frame(spark, dt)
+    k = 7
+    rows = df.collect()
+    order = _numpy_order(rows, dt)
+    m_of = {r.id: r.m for r in rows}
+    ref_rk = {int(j): p + 1 for p, j in enumerate(order)}
+    ref_tile = {
+        int(j): t + 1
+        for t, part in enumerate(np.array_split(order, k))
+        for j in part
+    }
+    ref_cum = dict(
+        zip(map(int, order), np.cumsum([m_of[int(j)] for j in order]).tolist())
     )
 
-    def run_all():
-        rn = global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
-        nt = global_ntile(base, F.col("v"), [F.col("id")], 5, n_buckets=8)
-        ps = partitioned_prefix_sums(
-            base, F.col("v"), ["m"], n_buckets=8, tiebreaks=[F.col("id")]
-        )
-        return (
-            sorted(map(tuple, rn.collect())),
-            sorted(map(tuple, nt.collect())),
-            sorted(map(tuple, ps.collect())),
-        )
+    v, tb = F.col("v"), [F.col("id")]
+    w = Window.orderBy(v.asc_nulls_first(), "id")
+    win = {
+        r.id: (r.rk, r.t, r.cum)
+        for r in df.select(
+            "id",
+            F.row_number().over(w).alias("rk"),
+            F.ntile(k).over(w).alias("t"),
+            F.sum("m").over(w.rowsBetween(Window.unboundedPreceding, 0))
+            .alias("cum"),
+        ).collect()
+    }
+    assert {j: x[0] for j, x in win.items()} == ref_rk
+    assert {j: x[1] for j, x in win.items()} == ref_tile
+    assert {j: x[2] for j, x in win.items()} == ref_cum
 
-    monkeypatch.setenv("SPARK_GRAFT_SINGLEPASS_BUCKETS", "0")
-    legacy = run_all()
-    monkeypatch.setenv("SPARK_GRAFT_SINGLEPASS_BUCKETS", "1")
-    single = run_all()
-    assert legacy == single
+    def got(frame, col):
+        return {r.id: r[col] for r in frame.select("id", col).collect()}
 
-
-def test_single_pass_runs_one_eager_job(spark):
-    """The merged path must launch exactly ONE eager job at plan-build
-    time (the histogram collect) where the legacy path launched two —
-    the jobs-count claim of VERDICT r10 ask #3, pinned."""
-    base = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 97).cast("bigint").alias("v")
+    nb = 8
+    assert got(global_row_number(df, v, tb, n_buckets=nb), "rk") == ref_rk
+    assert got(global_ntile(df, v, tb, k, n_buckets=nb), "bucket") == ref_tile
+    nts = global_ntiles(
+        df, [(v, "t_v"), (-F.col("id"), "t_neg")], tb, k, n_buckets=nb
     )
+    assert got(nts, "t_v") == ref_tile
+    ref_neg = {
+        int(j): t + 1
+        for t, part in enumerate(np.array_split(sorted(m_of, reverse=True), k))
+        for j in part
+    }
+    assert got(nts, "t_neg") == ref_neg
+    ps = partitioned_prefix_sums(df, v, ["m"], n_buckets=nb, tiebreaks=tb)
+    assert got(ps, "cum_m") == ref_cum
+
+
+@pytest.mark.parametrize("dt", _DTYPES)
+def test_each_helper_builds_with_one_eager_job(spark, dt):
+    """Building any global helper launches exactly ONE eager job (the
+    histogram collect), DATE included. AQE is off while counting so
+    one collect is one job rather than one job per shuffle stage."""
+    from aws_iceberg_automation_spark.functions.ranking import global_ntiles
+
+    df = _edge_frame(spark, dt)
+    v, tb = F.col("v"), [F.col("id")]
+    builds = {
+        "global_row_number": lambda: global_row_number(df, v, tb),
+        "global_ntile": lambda: global_ntile(df, v, tb, 5),
+        "global_ntiles": lambda: global_ntiles(
+            df, [(v, "a"), (F.col("m"), "b")], tb, 5
+        ),
+        "partitioned_prefix_sums": lambda: partitioned_prefix_sums(
+            df, v, ["m"], tiebreaks=tb
+        ),
+    }
     tracker = spark.sparkContext.statusTracker()
-
-    def jobs_during_build(env):
-        import os
-
-        os.environ["SPARK_GRAFT_SINGLEPASS_BUCKETS"] = env
-        try:
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for name, build in builds.items():
             before = tracker.getJobIdsForGroup(None)
             hi = max(before) if before else -1
-            global_row_number(base, F.col("v"), [F.col("id")], n_buckets=8)
-            after = tracker.getJobIdsForGroup(None)
-            return len([j for j in after if j > hi])
-        finally:
-            os.environ.pop("SPARK_GRAFT_SINGLEPASS_BUCKETS", None)
+            build()
+            n = len([j for j in tracker.getJobIdsForGroup(None) if j > hi])
+            assert n == 1, f"{name} on {dt}: {n} eager jobs"
+    finally:
+        spark.conf.set(key, prev)
 
-    assert jobs_during_build("1") < jobs_during_build("0")
+
+@pytest.mark.parametrize(
+    "make",
+    [F.timestamp_seconds, lambda i: i.cast("decimal(12,2)")],
+    ids=["timestamp", "decimal"],
+)
+def test_unsupported_value_type_raises(spark, make):
+    """TIMESTAMP and DECIMAL values are outside the exact cells: every
+    helper fails with a TypeError naming the type."""
+    from aws_iceberg_automation_spark.functions.ranking import global_ntiles
+
+    df = spark.range(10).select("id", make(F.col("id")).alias("v"))
+    t = re.escape(df.schema["v"].dataType.simpleString())
+    v, tb = F.col("v"), [F.col("id")]
+    with pytest.raises(TypeError, match=t):
+        global_row_number(df, v, tb)
+    with pytest.raises(TypeError, match=t):
+        global_ntile(df, v, tb, 3)
+    with pytest.raises(TypeError, match=t):
+        global_ntiles(df, [(F.col("id"), "a"), (v, "b")], tb, 3)
+    with pytest.raises(TypeError, match=t):
+        partitioned_prefix_sums(df.withColumn("m", F.lit(1)), v, ["m"])
+
+
+def test_streaming_frame_raises(spark):
+    stream = spark.readStream.format("rate").load()
+    with pytest.raises(ValueError, match="batch-only"):
+        global_row_number(stream, F.col("value"), [F.col("timestamp")])
